@@ -58,7 +58,6 @@ def cmd_autotag(args) -> None:
     spark = _spark(args)
     transcripts = spark.read.parquet(args.input)
     res = run_pipeline(spark, transcripts, args.run_dir, run_id=args.run_id,
-                       fused_linking=args.fused,
                        infer_broader=args.infer_broader,
                        ontology_pdf=_ontology_pdf(spark, args))
     print(json.dumps({"triples": res.triples.count(),
@@ -233,9 +232,6 @@ def main(argv: list[str] | None = None) -> None:
     a.add_argument("--run-dir", required=True); a.add_argument("--run-id", default="run-0")
     a.add_argument("--ontology", default=None,
                    help="SKOS Turtle file to use as the ontology")
-    a.add_argument("--fused", action="store_true",
-                   help="coarse checkpoints via the broadcast canonical "
-                        "table (the high-throughput 10^12-turn configuration)")
     a.add_argument("--infer-broader", action="store_true")
     a.set_defaults(fn=cmd_autotag)
 

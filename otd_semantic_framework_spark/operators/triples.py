@@ -65,11 +65,13 @@ def tool_triples(transcripts: DataFrame) -> DataFrame:
 
 
 def reply_triples(transcripts: DataFrame) -> DataFrame:
+    """A repeated (conv_id, turn_idx) row lags onto itself; the strict
+    ``<`` drops that self-edge along with the first turn's NULL."""
     w = conv_window()
     return (
         transcripts
         .withColumn("prev_turn_idx", F.lag("turn_idx", 1).over(w))
-        .filter(F.col("prev_turn_idx").isNotNull())
+        .filter(F.col("prev_turn_idx") < F.col("turn_idx"))
         .select(
             _subj(F.col("conv_id"), F.col("turn_idx")).alias("subj"),
             F.lit("replies_to").alias("pred"),

@@ -3,16 +3,21 @@ resumable stages (P16).
 
 Stage graph::
 
-    transcripts ─ P2 assemble ─ P3 normalize ─ P4/P5 mentions
-        │                                          │
-        │                                 P6/P7 candidates (broadcast ontology)
-        │                                          │
-        │                                 P8/P9/P10 canonical links
-        ├────────────── P12 triples (mentions ∪ uses_tool ∪ replies_to)
-        │                                          │
-        │                                 P13 dedup → P15 materialize
-        │                                          │
-        └──────────────────────────────── P14 CDS scores
+    ontology ─── concept_similarity (P10 Wu-Palmer matrix) ───────┐
+                                                                  │
+    transcripts ─ P11 respread ─ P3 normalize ─ fused mention UDF │
+        │         (P4/P5 mentions → P7–P9 canonical link →        │
+        │          per-turn dedup: ONE mapInPandas stage)         │
+        │                         │                               │
+        └─ uses_tool, replies_to ─┴─ P12 union ─ P13 dedup        │
+                                                   │              │
+                                                triples ──── cds_scores (P14)
+                                                   │
+                                  inferred_triples (P12b, optional)
+
+Each named stage is checkpointed. ``build_triples_fast`` is the one
+triple-construction plan: ``run_pipeline`` and the streaming
+micro-batches checkpoint or append ``dedup_triples`` of it.
 
 Checkpointing (P16, north rule "resumable from checkpoint with
 per-partition lineage + metrics"): every stage writes its output table
@@ -35,11 +40,8 @@ from pyspark.sql import functions as F
 
 from .. import semantics as S
 from ..operators.cds import cds_scores
-from ..operators.linking import canonicalize, link_candidates_broadcast
-from ..operators.mentions import (detect_mentions, detect_mentions_exploded,
-                                  explode_mentions)
 from ..operators.normalize import normalize_turns
-from ..operators.triples import dedup_triples, extract_triples
+from ..operators.triples import dedup_triples
 from ..operators.wup import concept_similarity
 from ..schemas import ONTOLOGY_CONCEPTS
 from ..sources import fixtures
@@ -131,25 +133,22 @@ class CheckpointedRun:
 
 def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
                        ontology_pdf: pd.DataFrame | None = None,
-                       spread_partitions: int | None = None,
-                       fuse_canonical: bool = True) -> DataFrame:
-    """Single-expression hot path (no checkpoint materialization).
+                       spread_partitions: int | None = None) -> DataFrame:
+    """The triple-construction plan (no checkpoint materialization).
 
-    Default plan (``fuse_canonical=True``): fully-fused mapInPandas
-    (regex mentions → in-batch canonical map → per-turn max-dedup) →
-    3-rule union. Every rule then emits globally-unique (s,p,o) rows —
-    mention duplicates only ever arise within one turn and are collapsed
-    inside the UDF batch — so P13's full-corpus dedup shuffle is
-    unnecessary by construction and the hot path has exactly ONE wide
-    boundary (the P11 respread; the replies window is narrow-ish:
-    conv_id+turn_idx only after column pruning). PRECONDITION: one row
-    per (conv_id, turn_idx), which P2 turn assembly guarantees; pass
-    ``fuse_canonical=False`` for raw un-assembled input to route through
-    the broadcast-join + global-dedup plan instead. Output equality of
-    both plans with run_pipeline is pinned by
-    tests/test_autotag.py::test_fast_path_equals_checkpointed."""
-    from ..operators.linking import (canonicalize_broadcast,
-                                     surface_canonical_table)
+    Fully-fused mapInPandas (regex mentions → in-batch canonical map →
+    per-turn max-dedup) → 3-rule union. Every rule then emits
+    globally-unique (s,p,o) rows — mention duplicates only ever arise
+    within one turn and are collapsed inside the UDF batch — so P13's
+    full-corpus dedup shuffle is unnecessary by construction and the
+    plan has exactly ONE wide boundary (the P11 respread; the replies
+    window is narrow-ish: conv_id+turn_idx only after column pruning).
+    PRECONDITION for uniqueness: one row per (conv_id, turn_idx), which
+    P2 turn assembly guarantees. For raw input that may repeat a turn,
+    use ``run_pipeline``, which applies ``dedup_triples`` on top.
+    Equality with the pinned oracle tagger is tested in
+    tests/test_autotag.py."""
+    from ..operators.linking import surface_canonical_table
     from ..operators.mentions import detect_canonical_concepts_exploded
     from ..operators.triples import (canonical_mention_triples,
                                      reply_triples, tool_triples)
@@ -177,17 +176,13 @@ def build_triples_fast(spark: SparkSession, transcripts: DataFrame,
     else:
         n = spread_partitions or spark.sparkContext.defaultParallelism * 3
         spread = transcripts.repartition(n)
-    if fuse_canonical:
-        canon_concepts = detect_canonical_concepts_exploded(
-            normalize_turns(spread), gaz, canon_table)
-        return (
-            canonical_mention_triples(canon_concepts)
-            .unionByName(tool_triples(transcripts))
-            .unionByName(reply_triples(transcripts))
-        )
-    mentions = detect_mentions_exploded(normalize_turns(spread), gaz)
-    canon = canonicalize_broadcast(mentions, canon_table)
-    return dedup_triples(extract_triples(transcripts, canon))
+    canon_concepts = detect_canonical_concepts_exploded(
+        normalize_turns(spread), gaz, canon_table)
+    return (
+        canonical_mention_triples(canon_concepts)
+        .unionByName(tool_triples(transcripts))
+        .unionByName(reply_triples(transcripts))
+    )
 
 
 def run_pipeline(
@@ -202,6 +197,12 @@ def run_pipeline(
     infer_broader: bool = False,
 ) -> PipelineResult:
     """Execute the full pipeline with checkpoints under ``run_dir``.
+
+    Stages: concept_similarity → triples → (inferred_triples) →
+    cds_scores. The ``triples`` stage checkpoints
+    ``dedup_triples(build_triples_fast(...))``; the dedup keeps the
+    output one row per (subj, pred, obj) even when the input repeats a
+    (conv_id, turn_idx) row.
 
     ``stop_after`` kills the run after the named stage (resume tests).
 
@@ -219,29 +220,10 @@ def run_pipeline(
     the manual∪auto union instead of autotag alone, exactly like the
     reference's curated tagging graph feeds its CDS matrix [K].
 
-    ``fused_linking=True`` collapses mentions→candidates→canonical into
-    ONE checkpointed stage computed via the precomputed broadcast
-    canonical table (the fast-path plan) — ~3x fewer large intermediate
-    materializations, same output (equality pinned by tests). Resume
-    granularity becomes concept_similarity → canonical → triples → cds,
-    which is the right trade at 10^12 turns where writing the candidate
-    table (mentions × top-k) dominates; the fine-grained default keeps
-    every stage inspectable/resumable for debugging and small runs.
-
-    Measured spectrum on the 7.9M-turn bench corpus, local[32]
-    (BENCH/BASELINE.md): build_triples_fast (no checkpoints) 25.8 s;
-    fused_linking 165 s; fine-grained 276 s — identical 20,495,698
-    triples from all three. At cluster scale the per-input-slice
-    manifest buckets, not more stages, are the unit of partial-failure
-    recovery.
+    ``fused_linking`` is accepted and ignored, so callers that still
+    pass it keep working; there is one linking plan.
     """
     ontology_pdf = ontology_pdf if ontology_pdf is not None else fixtures.ontology_pandas()
-    concepts = [
-        S.Concept(r.concept_id, r.pref_label, list(r.alt_labels), r.parent_id,
-                  int(r.depth), list(r.path))
-        for r in ontology_pdf.itertuples()
-    ]
-    gaz = S.build_gazetteer(concepts)
     run = CheckpointedRun(spark, run_dir, run_id)
     # The fingerprint must digest the ontology's CONTENT, not just its
     # size (same discipline as the manual-tags digest below): an edited
@@ -249,10 +231,10 @@ def run_pipeline(
     # re-parented subtree — must NOT resume checkpoints computed under
     # the old one. Order-free over the identity-bearing fields.
     onto_digest = S.stable_hash(
-        "onto", *sorted(f"{c.concept_id}\x00{c.pref_label}\x00"
-                        f"{c.parent_id}\x00{'/'.join(c.path)}\x00"
-                        f"{'+'.join(sorted(c.alt_labels))}"
-                        for c in concepts))
+        "onto", *sorted(f"{r.concept_id}\x00{r.pref_label}\x00"
+                        f"{r.parent_id}\x00{'/'.join(r.path)}\x00"
+                        f"{'+'.join(sorted(r.alt_labels))}"
+                        for r in ontology_pdf.itertuples()))
     cfg_fp = (len(ontology_pdf), f"onto:{onto_digest:x}",
               S.COS_THRESHOLD, S.LINK_ALPHA, S.TOP_K)
 
@@ -263,40 +245,8 @@ def run_pipeline(
     if stop_after == "concept_similarity":
         return PipelineResult(None, None, run.metrics)
 
-    # P11 respread before the UDF stage (hot-conversation stragglers)
-    spread = transcripts.repartition(spark.sparkContext.defaultParallelism * 3)
-
-    if fused_linking:
-        from ..operators.linking import (canonicalize_broadcast,
-                                         surface_canonical_table)
-        wup_pdf = pd.DataFrame(
-            [(a.concept_id, b.concept_id, S.wup_similarity(a, b))
-             for a in concepts for b in concepts],
-            columns=["concept_a", "concept_b", "wup"])
-        canon_table = surface_canonical_table(ontology_pdf, gaz, wup_pdf)
-        canonical = run.stage("canonical", cfg_fp, lambda: canonicalize_broadcast(
-            detect_mentions_exploded(normalize_turns(spread), gaz),
-            canon_table))
-        if stop_after == "canonical":
-            return PipelineResult(None, None, run.metrics)
-    else:
-        mentions = run.stage("mentions", cfg_fp, lambda: explode_mentions(
-            detect_mentions(normalize_turns(spread), gaz)))
-        if stop_after == "mentions":
-            return PipelineResult(None, None, run.metrics)
-
-        candidates = run.stage("candidates", cfg_fp, lambda: link_candidates_broadcast(
-            mentions, ontology_pdf, gaz))
-        if stop_after == "candidates":
-            return PipelineResult(None, None, run.metrics)
-
-        canonical = run.stage("canonical", cfg_fp, lambda: canonicalize(
-            candidates, concept_sim))
-        if stop_after == "canonical":
-            return PipelineResult(None, None, run.metrics)
-
     triples = run.stage("triples", cfg_fp, lambda: dedup_triples(
-        extract_triples(transcripts, canonical)))
+        build_triples_fast(spark, transcripts, ontology_pdf)))
     if stop_after == "triples":
         return PipelineResult(triples, None, run.metrics)
 

@@ -1237,9 +1237,8 @@ def q_kg_resume_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = derived_transcripts(spark, sf_dir).withColumn(
         "ts", F.lit(None).cast("timestamp"))
     onto = _fast_onto_pdf()
-    run_pipeline(spark, t, run_dir, ontology_pdf=onto, fused_linking=True)
-    r2 = run_pipeline(spark, t, run_dir, ontology_pdf=onto,
-                      fused_linking=True)
+    run_pipeline(spark, t, run_dir, ontology_pdf=onto)
+    r2 = run_pipeline(spark, t, run_dir, ontology_pdf=onto)
     m = _pd.read_parquet(_os.path.join(run_dir, "checkpoint_manifest.parquet"))
     summary = (m.groupby("stage", as_index=False)["rows_out"].sum()
                .sort_values("stage"))
@@ -1250,10 +1249,10 @@ def q_kg_resume_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_resume_manifest() -> str:
-    """DuckDB recompute of every fused-pipeline stage's row count:
-    mentions occurrences joined to the precomputed canonical table
-    (canonical), the 3-rule triple union (triples — same body as
-    kg_fast_pipeline), Wu-Palmer matrix size (concept_similarity), and
+    """DuckDB recompute of every pipeline stage's row count: the 3-rule
+    triple union over mention occurrences joined to the precomputed
+    canonical table (triples — same body as kg_fast_pipeline),
+    Wu-Palmer matrix size (concept_similarity), and
     CDS propagation (cds_scores) with wup computed UNROUNDED from path
     literals — bit-identical to Spark's concept_similarity() doubles,
     unlike the 6dp-rounded driver_wup VALUES."""
@@ -1327,9 +1326,8 @@ cds AS (
   GROUP BY t.subj_key, w.concept_b
   HAVING round(max(t.tag_score * w.wup), 6) >= {S.CDS_THRESHOLD}
 )
-SELECT 'canonical' AS stage,
-       (SELECT count(*) FROM canonical) AS rows_out, true AS resumed
-UNION ALL SELECT 'cds_scores', (SELECT count(*) FROM cds), true
+SELECT 'cds_scores' AS stage,
+       (SELECT count(*) FROM cds) AS rows_out, true AS resumed
 UNION ALL SELECT 'concept_similarity', (SELECT count(*) FROM wup), true
 UNION ALL SELECT 'triples', (SELECT count(*) FROM triples), true
 """

@@ -27,10 +27,8 @@ def test_cli_lifecycle(tmp_path):
     out = _run("autotag", "--input", corpus, "--run-dir", run_dir)
     assert out["triples"] > 100 and out["cds_rows"] > 0
 
-    fused = _run("autotag", "--input", corpus,
-                 "--run-dir", str(tmp_path / "fused_run"), "--fused")
-    assert fused["triples"] == out["triples"]
-    assert "mentions" not in fused["metrics"]
+    # one linking plan: no fine-grained mentions/candidates/canonical stage
+    assert not {"mentions", "candidates", "canonical"} & set(out["metrics"])
 
     out = _run("search", "--run-dir", run_dir, "bus timetable delay", "--top-n", "3")
     assert len(out["results"]) == 3

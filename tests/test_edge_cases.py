@@ -72,3 +72,22 @@ def test_garbage_search_query(spark, tiny_df, tmp_path):
         out = search(q, res.cds, onto)
         assert out.count() >= 0  # materializes without error
         assert out.columns == ["subj_key", "rank", "search_score", "matched_concepts"]
+
+
+def test_duplicated_turn_rows_collapse(spark, tiny_df, tmp_path):
+    """Raw input that repeats some (conv_id, turn_idx) rows (a replayed
+    file, an at-least-once sink) yields exactly the triples of the
+    un-duplicated input, one row per (subj, pred, obj): the fused
+    triple plan is unique only per assembled turn, so run_pipeline's
+    dedup_triples step and the replies_to rule must absorb the repeats."""
+    dup = tiny_df.unionByName(tiny_df.filter(F.col("turn_idx") % 3 == 1))
+    assert dup.count() > tiny_df.count()
+
+    def key(df):
+        return sorted((r.subj, r.pred, r.obj, r.conv_id, r.turn_idx,
+                       round(r.score, 6)) for r in df.collect())
+
+    got = key(run_pipeline(spark, dup, str(tmp_path / "dup")).triples)
+    want = key(run_pipeline(spark, tiny_df, str(tmp_path / "once")).triples)
+    assert got == want
+    assert len({r[:3] for r in got}) == len(got)

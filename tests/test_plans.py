@@ -13,6 +13,7 @@ from otd_semantic_framework_spark.operators.linking import (
 from otd_semantic_framework_spark.operators.mentions import (
     detect_mentions, explode_mentions)
 from otd_semantic_framework_spark.operators.normalize import normalize_turns
+from otd_semantic_framework_spark.operators.triples import dedup_triples
 from otd_semantic_framework_spark.operators.wup import concept_similarity
 from otd_semantic_framework_spark.plans.pipeline import build_triples_fast
 from otd_semantic_framework_spark.sources.fixtures import (
@@ -48,7 +49,7 @@ def test_canonicalize_wup_join_is_broadcast(spark, tiny_df, ontology_pdf):
 
 
 def test_fast_path_plan_shape(spark, tiny_df):
-    """The fused hot path (fuse_canonical=True default): JOIN-FREE and
+    """The fused triple plan: JOIN-FREE and
     AGGREGATION-FREE — canonical mapping and per-turn dedup happen inside
     the single mapInPandas stage, so the mention branch is scan →
     round-robin exchange → MapInPandas → project, with nothing wide after
@@ -59,21 +60,6 @@ def test_fast_path_plan_shape(spark, tiny_df):
     assert "HashAggregate" not in plan  # per-turn dedup fused into the UDF
     assert "CartesianProduct" not in plan
     assert "MapInPandas" in plan
-
-
-def test_fast_path_unfused_plan_shape(spark, tiny_df):
-    """The unfused fallback (fuse_canonical=False, for un-assembled
-    input): broadcast canonical join + map-side-partial dedup agg, no
-    sort-merge join, codegen spans present (codegen explain mode — the
-    AQE root string hides WholeStageCodegen until a plan is final)."""
-    df = build_triples_fast(spark, tiny_df, fuse_canonical=False)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    jvm = spark.sparkContext._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("codegen")
-    assert "WholeStageCodegen" in df._jdf.queryExecution().explainString(mode)
 
 
 def test_scan_pushdown_filter_and_pruning(spark, tmp_path):
@@ -95,9 +81,9 @@ def test_dedup_is_hash_aggregate_with_partials(spark, tiny_df):
     live: min(string) aggregates degrade to sort-based) and must
     partial-aggregate map-side (two HashAggregate levels around one
     exchange) — what keeps the shuffle linear in distinct keys at
-    10^12-turn scale. (Routes through fuse_canonical=False: the fused
-    default has no dedup aggregate at all, by design.)"""
-    plan = _plan(build_triples_fast(spark, tiny_df, fuse_canonical=False))
+    10^12-turn scale. Audits the plan run_pipeline checkpoints: the
+    fused build_triples_fast has no aggregate of its own, by design."""
+    plan = _plan(dedup_triples(build_triples_fast(spark, tiny_df)))
     assert "SortAggregate" not in plan
     assert plan.count("HashAggregate") >= 2
 

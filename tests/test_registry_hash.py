@@ -16,10 +16,12 @@ from otd_semantic_framework_spark.plans import spark_only_queries as SOQ
 
 # pinned against commit 0e2b7dd (pre-split monolith); re-pinned in the
 # same commits that added stream_cds (paired) and multimodal_decode_pil
-# (rows-only) — the only two r5 registry additions
+# (rows-only) — the only two r5 registry additions. OSQL_MD5 re-pinned
+# when run_pipeline lost its 'canonical' stage: the kg_resume_manifest
+# oracle no longer reports a row for it
 N_PAIRED = 344
 QKEYS_MD5 = "4a9de1997b06bf58e89cfafebca62416"
-OSQL_MD5 = "e745a3788e33ef61eb8a75e4c914e461"
+OSQL_MD5 = "361b5055404126ac555b334646357337"
 ROWS_ONLY = {"dedup_minhash_fast", "stats_approx_distinct",
              "multimodal_decode_pil"}
 

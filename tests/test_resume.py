@@ -16,7 +16,7 @@ def _triples_key(df):
                   for r in df.collect())
 
 
-@pytest.mark.parametrize("stop_after", ["mentions", "candidates", "canonical"])
+@pytest.mark.parametrize("stop_after", ["concept_similarity", "triples"])
 def test_resume_equals_single_run(spark, tiny_df, tmp_path, stop_after):
     single_dir = str(tmp_path / f"single_{stop_after}")
     resumed_dir = str(tmp_path / f"resumed_{stop_after}")
@@ -24,42 +24,23 @@ def test_resume_equals_single_run(spark, tiny_df, tmp_path, stop_after):
     full = run_pipeline(spark, tiny_df, single_dir)
 
     partial = run_pipeline(spark, tiny_df, resumed_dir, stop_after=stop_after)
-    assert partial.triples is None
+    assert partial.cds is None
     resumed = run_pipeline(spark, tiny_df, resumed_dir)
 
     assert _triples_key(resumed.triples) == _triples_key(full.triples)
     # stages up to the kill point were resumed, not recomputed
     assert resumed.metrics[stop_after]["resumed"] is True
-
-
-def test_fused_linking_equals_fine(spark, tiny_df, tmp_path):
-    """fused_linking=True (single checkpointed canonical stage, broadcast
-    precomputed table — the 10^12-turn configuration) produces identical
-    triples+cds to the fine-grained staged path, resumes after a kill,
-    and skips the mentions/candidates materializations."""
-    fine = run_pipeline(spark, tiny_df, str(tmp_path / "fine"))
-    fused_dir = str(tmp_path / "fused")
-    partial = run_pipeline(spark, tiny_df, fused_dir, fused_linking=True,
-                           stop_after="canonical")
-    assert partial.triples is None
-    fused = run_pipeline(spark, tiny_df, fused_dir, fused_linking=True)
-    assert fused.metrics["canonical"]["resumed"] is True
-    assert "mentions" not in fused.metrics
-    assert "candidates" not in fused.metrics
-    assert _triples_key(fused.triples) == _triples_key(fine.triples)
-    k = lambda df: sorted((r.subj_key, r.concept_id, round(r.score, 6))  # noqa: E731
-                          for r in df.collect())
-    assert k(fused.cds) == k(fine.cds)
-    assert not os.path.exists(os.path.join(fused_dir, "mentions"))
+    assert resumed.metrics["cds_scores"]["resumed"] is False
 
 
 def test_manifest_lineage_counters(spark, tiny_df, tmp_path):
     run_dir = str(tmp_path / "lineage")
     res = run_pipeline(spark, tiny_df, run_dir)
     m = pd.read_parquet(os.path.join(run_dir, "checkpoint_manifest.parquet"))
-    stages = set(m.stage)
-    assert {"concept_similarity", "mentions", "candidates", "canonical",
-            "triples", "cds_scores"} <= stages
+    assert set(m.stage) == {"concept_similarity", "triples", "cds_scores"}
+    # linking runs inside the triples stage: no table of its own
+    for gone in ("mentions", "candidates", "canonical"):
+        assert not os.path.exists(os.path.join(run_dir, f"{gone}.parquet"))
     assert (m.status == "complete").all()
     # per-bucket counters sum to the stage total
     tri = m[m.stage == "triples"]
